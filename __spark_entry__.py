@@ -68,6 +68,7 @@ def entry(spark: SparkSession) -> DataFrame:
     import patito_spark as pt
     from patito_spark.errors import get_exc_type
     from patito_spark.plans.checks import find_errors
+    from patito_spark.sources.io import arrow_frame
 
     class Document(pt.Model):
         doc_id: int = pt.Field(unique=True)
@@ -82,8 +83,10 @@ def entry(spark: SparkSession) -> DataFrame:
          int(getattr(e.exc, "count", 1)))
         for e in errors
     ] or [("_all", "ok", "no violations", 0)]
-    return spark.createDataFrame(
-        rows, "column string, error_type string, message string, violation_count long"
+    return arrow_frame(
+        spark,
+        rows,
+        "column string, error_type string, message string, violation_count long",
     )
 
 
@@ -115,7 +118,7 @@ FROM documents
 
 
 def q_unique_violations(spark, sf_dir):
-    # the salted two-stage duplicate-member count (engine's V7 plan)
+    # the one-aggregation duplicate-member count (engine's V7 plan)
     from patito_spark.plans.uniqueness import duplicate_stats
 
     docs = _t(spark, sf_dir, "documents")

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity
+from ..sources.io import arrow_frame
 from .dedup import _materialize
 
 #: Probe frames are collected to the driver (the probe matrix ships in the
@@ -295,8 +296,8 @@ def ivf_topk(
     # summation order)
     probe_buckets = F.broadcast(
         _materialize(
-            spark.createDataFrame(
-                assignments, f"probe_id long, _centroid int, _pvec array<double>"
+            arrow_frame(
+                spark, assignments, "probe_id long, _centroid int, _pvec array<double>"
             ),
             _pnorm=l2_norm(F.col("_pvec")),
         )

@@ -16,12 +16,14 @@ Execution plan per run (SURVEY §4.3):
 3. **Job 1** — ``df.filter(partition ∈ pending).groupBy(partition).agg(ALL
    check terms)``: one scan of only the pending partitions, one tiny shuffle
    row per partition.
-4. **Job 2** — global uniqueness with per-partition attribution: salted
-   ``groupBy(value, partition)`` pre-agg → global per-value totals → each
-   partition charged its own members of cross-partition duplicate groups.
-5. Verdicts + violations appended atomically per partition batch; a re-run
-   with the same checkpoint directory skips finished partitions (idempotent
-   resume).
+4. **Job 2** — global uniqueness with per-partition attribution:
+   ``groupBy(column, value, partition)`` partials (``_unique_partials``,
+   computed once per run) → global per-key totals → each partition charged
+   its own members of cross-partition duplicate groups, in ONE charge job
+   (``_charge``) that also yields the prior-only charge on exact resume.
+5. Verdicts + violations appended per run (built on the driver, shipped to
+   the JVM as Arrow tables); a re-run with the same checkpoint directory
+   skips finished partitions (idempotent resume).
 
 Resume and global uniqueness: uniqueness is a *global* property, but
 finished partitions are not re-scanned on resume.  Two modes:
@@ -37,13 +39,17 @@ finished partitions are not re-scanned on resume.  Two modes:
   and emits retroactive delta violation rows for finished partitions
   whose members joined a cross-boundary duplicate group.  The cumulative
   violation table therefore always equals what one uninterrupted run
-  would have produced.  Cost: the partials dataset is O(distinct keys)
-  (16-byte md5 per key — the one checkpoint artifact that scales with
-  data, which is inherent to exact cross-run uniqueness), and each
-  resumed run re-shuffles it once.  Crash-safe: partials are written
-  *before* verdicts and are only trusted when their (partition, run_id)
-  matches a persisted verdict, so a run killed between the two writes
-  re-runs cleanly without double-counting.
+  would have produced.  The fresh partials are cached for the run: the
+  charge job computes them and the partials append reads them back, so
+  the input is scanned once for uniqueness.  Cost: the partials dataset
+  is O(distinct keys) (16-byte md5 per key — the one checkpoint artifact
+  that scales with data, which is inherent to exact cross-run
+  uniqueness), and each resumed run re-shuffles it once.  Crash-safe:
+  partials are written *before* verdicts and are only trusted when their
+  (partition, run_id) matches a persisted verdict, so a run killed
+  between the two writes re-runs cleanly without double-counting.  A
+  retry under the SAME explicit run_id is refused (its partials would
+  share the orphans' trust key); retry under a new one.
 
 Checkpoint storage is a parquet directory pair (``verdicts/``,
 ``violations/``) written with dynamic partition append — the layout is
@@ -60,8 +66,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..errors import get_exc_type
+from ..sources.io import arrow_frame, write_report_table
 from .checks import _Ctx, _compile_level, _transform_df
 
 VERDICT_SCHEMA = T.StructType(
@@ -171,55 +179,86 @@ class ValidationRunner:
         self.checkpoint_table = checkpoint_table
 
     # -- checkpoint I/O --------------------------------------------------------
-    def _read_verdicts(self, spark: SparkSession) -> Optional[DataFrame]:
+    def _read_dataset(
+        self, spark: SparkSession, suffix: str, schema: T.StructType
+    ) -> Optional[DataFrame]:
+        """One checkpoint dataset, or None before its first write.  Parquet
+        reads pass the checkpoint schema, so no footer-inference job runs."""
         if self.checkpoint_table:
-            name = f"{self.checkpoint_table}_verdicts"
-            if not spark.catalog.tableExists(name):
-                return None
-            return spark.table(name)
+            name = f"{self.checkpoint_table}_{suffix}"
+            return spark.table(name) if spark.catalog.tableExists(name) else None
         if self.checkpoint_dir:
             try:
-                return spark.read.parquet(f"{self.checkpoint_dir}/verdicts")
+                return spark.read.schema(schema).parquet(
+                    f"{self.checkpoint_dir}/{suffix}"
+                )
             except Exception:
                 return None
         return None
 
+    def _read_verdicts(self, spark: SparkSession) -> Optional[DataFrame]:
+        return self._read_dataset(spark, "verdicts", VERDICT_SCHEMA)
+
     def _finished_partitions(self, spark: SparkSession) -> set:
+        """``(partition, run_id)`` of every checkpointed verdict — the one
+        read of the verdict table per run: it decides the pending
+        partitions and which persisted partials are trusted."""
         verdicts = self._read_verdicts(spark)
         if verdicts is None:
             return set()
         return {
-            r["partition"]
-            for r in verdicts.select("partition").distinct().collect()
+            (r["partition"], r["run_id"])
+            for r in verdicts.select("partition", "run_id").distinct().collect()
         }
 
-    def _read_unique_partials(self, spark: SparkSession) -> Optional[DataFrame]:
-        """Persisted partials from FINISHED runs only.
+    def _read_unique_partials(
+        self, spark: SparkSession, finished_runs: set
+    ) -> Optional[DataFrame]:
+        """Persisted partials from FINISHED runs only, as ``_p, k, h, cnt``.
 
         A partials row is trusted iff its (partition, run_id) matches a
         persisted verdict — partials are written before verdicts, so a
         crash between the two writes leaves orphan rows that a re-run of
         the partition would otherwise double-count.
         """
-        raw = None
-        if self.checkpoint_table:
-            name = f"{self.checkpoint_table}_unique_partials"
-            if spark.catalog.tableExists(name):
-                raw = spark.table(name)
-        elif self.checkpoint_dir:
-            try:
-                raw = spark.read.parquet(f"{self.checkpoint_dir}/unique_partials")
-            except Exception:
-                raw = None
-        verdicts = self._read_verdicts(spark)
-        if raw is None or verdicts is None:
+        if not finished_runs:
             return None
-        keys = verdicts.select("partition", "run_id").distinct()
+        raw = self._read_dataset(spark, "unique_partials", UNIQUE_PARTIALS_SCHEMA)
+        if raw is None:
+            return None
+        keys = F.broadcast(
+            arrow_frame(spark, list(finished_runs), "partition string, run_id string")
+        )
         # eqNullSafe: the NULL partition's partials must survive the join
         cond = raw["partition"].eqNullSafe(keys["partition"]) & (
             raw["run_id"] == keys["run_id"]
         )
-        return raw.join(keys, cond, "left_semi")
+        return raw.join(keys, cond, "left_semi").select(
+            F.col("partition").alias("_p"),
+            F.col("column").alias("k"),
+            F.col("key_hash").alias("h"),
+            "cnt",
+        )
+
+    def _refuse_torn_run_id(
+        self, spark: SparkSession, run_id: str, finished: set
+    ) -> None:
+        """An explicit *run_id* that already owns partials of an unfinished
+        partition is a retry of a torn attempt: the retry's partials would
+        land beside the orphans under the same (partition, run_id) key, and
+        once its verdict is written both copies would be trusted."""
+        raw = self._read_dataset(spark, "unique_partials", UNIQUE_PARTIALS_SCHEMA)
+        if raw is None:
+            return
+        orphans = raw.filter(
+            (F.col("run_id") == run_id) & _pending(F.col("partition"), finished)
+        )
+        if orphans.limit(1).count():
+            raise ValueError(
+                f"run_id {run_id!r} already has unique partials for a "
+                "partition without a verdict (an interrupted attempt); "
+                "retry under a new run_id"
+            )
 
     def _persist_unique_partials(self, partials: DataFrame, run_id: str) -> None:
         """Distributed append of this run's partials (NEVER collected —
@@ -232,8 +271,6 @@ class ValidationRunner:
             F.lit(run_id).alias("run_id"),
         )
         if self.checkpoint_table:
-            from ..sources.io import write_report_table
-
             write_report_table(out, f"{self.checkpoint_table}_unique_partials")
         elif self.checkpoint_dir:
             out.write.mode("append").parquet(
@@ -243,32 +280,21 @@ class ValidationRunner:
     def _persist(
         self, spark: SparkSession, verdicts: list, violations: list
     ) -> None:
-        if self.checkpoint_table:
-            from ..sources.io import write_report_table
-
-            if verdicts:
-                write_report_table(
-                    spark.createDataFrame(verdicts, VERDICT_SCHEMA).coalesce(1),
-                    f"{self.checkpoint_table}_verdicts",
-                )
-            if violations:
-                write_report_table(
-                    spark.createDataFrame(violations, VIOLATION_SCHEMA).coalesce(1),
-                    f"{self.checkpoint_table}_violations",
-                )
+        """Append the driver-built verdict and violation rows.  The rows
+        reach the JVM as one Arrow table each, never as a Python RDD."""
+        if not (self.checkpoint_table or self.checkpoint_dir):
             return
-        if not self.checkpoint_dir:
-            return
-        if verdicts:
-            spark.createDataFrame(verdicts, VERDICT_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{self.checkpoint_dir}/verdicts")
-        if violations:
-            spark.createDataFrame(
-                violations, VIOLATION_SCHEMA
-            ).coalesce(1).write.mode("append").parquet(
-                f"{self.checkpoint_dir}/violations"
-            )
+        for rows, schema, suffix in (
+            (verdicts, VERDICT_SCHEMA, "verdicts"),
+            (violations, VIOLATION_SCHEMA, "violations"),
+        ):
+            if not rows:
+                continue
+            out = arrow_frame(spark, rows, schema).coalesce(1)
+            if self.checkpoint_table:
+                write_report_table(out, f"{self.checkpoint_table}_{suffix}")
+            else:
+                out.write.mode("append").parquet(f"{self.checkpoint_dir}/{suffix}")
 
     # -- run ---------------------------------------------------------------------
     def run(
@@ -285,7 +311,6 @@ class ValidationRunner:
         ``where=`` scoping on the run API).
         """
         spark = df.sparkSession
-        run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.time()
         model = self.model
 
@@ -296,18 +321,15 @@ class ValidationRunner:
             df = df.withColumn(self.partition_name, self.partition_expr)
         part = F.col(self.partition_name).cast("string")
 
-        finished = self._finished_partitions(spark)
+        finished_runs = self._finished_partitions(spark)
+        finished = {p for p, _ in finished_runs}
+        exact = self.unique_resume == "exact"
+        if run_id is None:
+            run_id = uuid.uuid4().hex[:12]
+        elif exact:
+            self._refuse_torn_run_id(spark, run_id, finished)
         if finished:
-            # null-safe resume: `~isin` evaluates to NULL (row silently
-            # dropped) for a NULL partition value, so the null partition is
-            # kept/skipped explicitly based on whether its verdict (recorded
-            # as a NULL `partition` cell) is already checkpointed
-            non_null = [v for v in finished if v is not None]
-            pending_named = ~part.isin(*non_null) if non_null else F.lit(True)
-            keep = (part.isNotNull() & pending_named) | (
-                part.isNull() & F.lit(None not in finished)
-            )
-            df = df.filter(keep)
+            df = df.filter(_pending(part, finished))
 
         # Job 0: schema-level errors — apply to the whole run
         schema_violations: list = []
@@ -409,49 +431,43 @@ class ValidationRunner:
         retro_violations: list = []
         if ctx.unique_targets:
             partials = _unique_partials(df, part, ctx.unique_targets)
-            if self.unique_resume == "exact":
-                prior = self._read_unique_partials(spark)
-                if prior is not None:
-                    prior = prior.select(
-                        F.col("partition").alias("_p"),
-                        F.col("column").alias("k"),
-                        F.col("key_hash").alias("h"),
-                        "cnt",
-                    ).persist()
-                    merged_charge = _charge(partials.unionByName(prior))
-                    prior_charge = _charge(prior)
-                    prior.unpersist()
-                else:
-                    merged_charge, prior_charge = _charge(partials), {}
-                # write partials BEFORE verdicts: a crash between the two
-                # leaves orphan partials that _read_unique_partials ignores
-                self._persist_unique_partials(partials, run_id)
+            if exact:
+                prior = self._read_unique_partials(spark, finished_runs)
+                # one scan: the charge job materialises the partials, the
+                # checkpoint append reads them back from the cache
+                partials.persist()
+                try:
+                    charge, prior_charge = _charge(partials, prior)
+                    # write partials BEFORE verdicts: a crash between the
+                    # two leaves orphans that _read_unique_partials ignores
+                    self._persist_unique_partials(partials, run_id)
+                finally:
+                    partials.unpersist()
                 pending_parts = set(per_partition_errors)
-                for (p, loc), count in merged_charge.items():
+                for (p, loc), count in charge.items():
                     if p in pending_parts:
                         per_partition_errors[p].append(_dup_error(loc, count))
-                    else:
-                        # finished partition retroactively joined a
-                        # cross-boundary duplicate group: emit the DELTA so
-                        # the cumulative violation table equals what one
-                        # uninterrupted run would have charged
-                        delta = count - prior_charge.get((p, loc), 0)
-                        if delta > 0:
-                            err = _dup_error(loc, delta)
-                            retro_violations.append(
-                                {
-                                    "partition": p,
-                                    "column": err.loc_tuple()[0],
-                                    "error_type": get_exc_type(
-                                        err.exc.__class__
-                                    ),
-                                    "message": str(err.exc),
-                                    "violation_count": delta,
-                                    "run_id": run_id,
-                                }
-                            )
+                        continue
+                    # finished partition retroactively joined a
+                    # cross-boundary duplicate group: emit the DELTA so the
+                    # cumulative violation table equals what one
+                    # uninterrupted run would have charged
+                    delta = count - prior_charge.get((p, loc), 0)
+                    if delta > 0:
+                        err = _dup_error(loc, delta)
+                        retro_violations.append(
+                            {
+                                "partition": p,
+                                "column": err.loc_tuple()[0],
+                                "error_type": get_exc_type(err.exc.__class__),
+                                "message": str(err.exc),
+                                "violation_count": delta,
+                                "run_id": run_id,
+                            }
+                        )
             else:
-                for (p, loc), count in _charge(partials).items():
+                charge, _ = _charge(partials)
+                for (p, loc), count in charge.items():
                     per_partition_errors.setdefault(p, []).append(
                         _dup_error(loc, count)
                     )
@@ -518,8 +534,6 @@ def _enum_samples_by_partition(df: DataFrame, part, enum_fetch: list) -> dict:
     per-partition ``row_number`` caps what each partition contributes to
     the driver.  One tiny job per violating enum column, and only when a
     violation exists somewhere."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     from .checks import _ENUM_SAMPLE_CAP  # noqa: PLC0415
 
     out: dict = {}
@@ -567,17 +581,56 @@ def _unique_partials(df: DataFrame, part, targets: list) -> DataFrame:
     )
 
 
-def _charge(partials: DataFrame) -> dict:
+def _charge(partials: DataFrame, prior: Optional[DataFrame] = None) -> tuple:
     """Each partition is charged its local member count of every
     (column, key) group whose GLOBAL total exceeds 1 — cross-partition
     duplicates are attributed to every partition that holds a member.
-    Output is driver-sized: one entry per (partition, column)."""
-    totals = partials.groupBy("k", "h").agg(F.sum("cnt").alias("total"))
+
+    With *prior* (persisted partials of finished partitions, same
+    columns), one job returns both the charge over ``partials ∪ prior``
+    and the charge the prior rows alone would have drawn: the prior rows
+    are tagged, and one window over (column, key) sums the total and the
+    prior total — one shuffle of the rows, each input read once, where a
+    ``groupBy`` joined back to its rows reads them twice.  Output is
+    driver-sized: ``({(partition, column): count}, {(partition, column):
+    prior count})``.
+    """
+    rows = partials.withColumn("_prior", F.lit(False))
+    if prior is not None:
+        rows = rows.unionByName(prior.withColumn("_prior", F.lit(True)))
+    prior_cnt = F.when(F.col("_prior"), F.col("cnt")).otherwise(F.lit(0))
+    group = Window.partitionBy("k", "h")
     charged = (
-        partials.join(totals, ["k", "h"])
+        rows.select(
+            "_p",
+            "k",
+            "cnt",
+            "_prior",
+            F.sum("cnt").over(group).alias("total"),
+            F.sum(prior_cnt).over(group).alias("prior_total"),
+        )
         .filter(F.col("total") > 1)
         .groupBy("_p", "k")
-        .agg(F.sum("cnt").alias("dups"))
+        .agg(
+            F.sum("cnt").alias("dups"),
+            F.sum(
+                F.when(F.col("prior_total") > 1, prior_cnt).otherwise(F.lit(0))
+            ).alias("prior_dups"),
+        )
         .collect()
     )
-    return {(r["_p"], r["k"]): int(r["dups"]) for r in charged}
+    charge = {(r["_p"], r["k"]): int(r["dups"]) for r in charged}
+    prior_charge = {
+        (r["_p"], r["k"]): int(r["prior_dups"]) for r in charged if r["prior_dups"]
+    }
+    return charge, prior_charge
+
+
+def _pending(part, finished: set):
+    """Rows whose partition has no checkpointed verdict.  Null-safe:
+    ``~isin`` evaluates to NULL (row silently dropped) for a NULL partition
+    value, so the null partition is kept or skipped explicitly, by whether
+    its verdict (a NULL ``partition`` cell) is checkpointed."""
+    non_null = [v for v in finished if v is not None]
+    named = ~part.isin(*non_null) if non_null else F.lit(True)
+    return (part.isNotNull() & named) | (part.isNull() & F.lit(None not in finished))

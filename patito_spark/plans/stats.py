@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.io import arrow_frame
+
 DEFAULT_HISTOGRAM_BUCKETS = 16
 
 
@@ -267,9 +269,7 @@ def discrete_percentiles_by_group(
     cum = counts.withColumn("_cum", F.sum("_c").over(w))
     totals = counts.groupBy("_g").agg(F.sum("_c").alias("n"))
     spark = df.sparkSession
-    probs_df = spark.createDataFrame(
-        [(float(p),) for p in probs], "p double"
-    )
+    probs_df = arrow_frame(spark, [(float(p),) for p in probs], "p double")
     hits = (
         cum.join(totals, "_g")
         .crossJoin(F.broadcast(probs_df))

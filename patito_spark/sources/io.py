@@ -9,10 +9,11 @@ pushes the pruning into the file scan) and a violation-report sink.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def read_csv(
@@ -35,8 +36,6 @@ def read_csv(
         for name, spec in model.__column_specs__.items()
         if spec.derived_from is None
     ]
-    from pyspark.sql import types as T
-
     fields = [
         T.StructField(n, model.__column_specs__[n].dtype, True) for n in read_cols
     ]
@@ -97,6 +96,30 @@ def scan_for(spark: SparkSession, model: type, path: str, fmt: str = "parquet"):
     return model.DataFrame(
         spark.read.format(fmt).schema(model.spark_schema()).load(path)
     )
+
+
+def arrow_frame(
+    spark: SparkSession, rows: list, schema: Union[T.StructType, str]
+) -> DataFrame:
+    """A DataFrame of driver-built *rows* (dicts keyed by field name, or
+    tuples in field order) with *schema* (a StructType or a DDL string),
+    shipped to the JVM as one Arrow table.
+
+    ``createDataFrame(<python list>)`` goes through a pickled Python RDD,
+    so the first action on it launches a Python worker (about 1 s per call
+    on a 4-vCPU host); an Arrow table is parallelised inside the JVM.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def write_report(df: DataFrame, path: str, partition_by: Optional[list] = None) -> None:

@@ -69,6 +69,8 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.io import arrow_frame
+
 __all__ = [
     "compact_stores",
     "crawl_ingest_stream",
@@ -295,14 +297,13 @@ def _read_store_table(
 
 def _meta_put(spark: SparkSession, store_root: str, key: str, value: str):
     table = _table_name(store_root, "meta")
-    rows = spark.createDataFrame([(key, value)], "key string, value string")
+    rows = arrow_frame(spark, [(key, value)], "key string, value string")
     if not spark.catalog.tableExists(table):
         rows.write.mode("overwrite").saveAsTable(table)
         return
     others = spark.table(table).filter(F.col("key") != key).collect()
-    spark.createDataFrame(
-        [(r["key"], r["value"]) for r in others] + [(key, value)],
-        "key string, value string",
+    arrow_frame(
+        spark, [*others, (key, value)], "key string, value string"
     ).write.mode("overwrite").insertInto(table, overwrite=True)
 
 
@@ -356,8 +357,8 @@ def _spec_put(
     same hash maps to the same bytes; duplicates are deduped on read)."""
     if _is_table_root(store_root):
         table = _table_name(store_root, "specs")
-        rows = spark.createDataFrame(
-            [(spec_hash, payload)], "spec_hash string, spec_json string"
+        rows = arrow_frame(
+            spark, [(spec_hash, payload)], "spec_hash string, spec_json string"
         )
         if not spark.catalog.tableExists(table):
             rows.write.mode("overwrite").saveAsTable(table)

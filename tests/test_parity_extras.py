@@ -53,6 +53,26 @@ def test_spec_roundtrip_unsigned(spark):
     assert rebuilt.specs["v"].le == 255
 
 
+def test_spec_roundtrip_temporal_and_binary_values():
+    """Date/timestamp bounds, defaults and consts are serialized as ISO
+    strings and bytes as hex; the rebuilt spec carries the original
+    values, not their JSON forms."""
+
+    class M(pt.Model):
+        day: dt.date = pt.Field(
+            dt.date(2000, 1, 1), ge=dt.date(1990, 1, 1), lt=dt.date(2040, 1, 1)
+        )
+        ts: dt.datetime = pt.Field(
+            gt=dt.datetime(1996, 1, 1, 12, 30), le=dt.datetime(2030, 1, 1)
+        )
+        tag: bytes = pt.Field(const=b"\x00\xff")
+
+    rebuilt = model_from_spec_json(M.spec_json())
+    for name in M.columns:
+        for key in ("default", "ge", "gt", "le", "lt", "const"):
+            assert getattr(rebuilt.specs[name], key) == getattr(M.specs[name], key)
+
+
 def test_pandas_examples(spark):
     class M(pt.Model):
         uid: int = pt.Field(unique=True)

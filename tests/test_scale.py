@@ -73,6 +73,24 @@ def test_webpage_model_catches_planted_violations(spark, pages):
     assert any("out of bound" in m for m in by_loc[("url",)])
 
 
+def test_webpage_spec_json_roundtrip_finds_same_errors(spark, pages):
+    """WebPage's datetime bounds survive spec_json: the rebuilt model
+    reports exactly the original's error dicts."""
+    from patito_spark.errors import flatten_errors
+    from patito_spark.plans.checks import find_errors
+    from patito_spark.spec import model_from_spec_json
+
+    rebuilt = model_from_spec_json(WebPage.spec_json())
+    df = pages.drop("crawl_date")
+
+    def dicts(model):
+        return sorted(map(repr, flatten_errors(find_errors(df, model))))
+
+    want = dicts(WebPage)
+    assert any(d.startswith("{'loc': ('warc_ts',)") for d in want)
+    assert dicts(rebuilt) == want
+
+
 def test_validation_never_mutates_text(spark, pages):
     # north-rule invariant: extracted text byte-identical per url
     before = pages.select(F.md5(F.col("text")).alias("h")).agg(
@@ -396,6 +414,153 @@ def test_runner_exact_resume_ignores_orphan_partials(spark, tmp_path):
         if v["column"] == "u"
     }
     assert dup == {"0": 1, "1": 1}
+
+
+class _U(pt.Model):
+    p: int
+    u: int = pt.Field(unique=True)
+
+
+def _dup_counts(violations) -> dict:
+    out: dict = {}
+    for v in violations:
+        if v["column"] == "u":
+            out[v["partition"]] = out.get(v["partition"], 0) + v["violation_count"]
+    return out
+
+
+def _persisted_dup_counts(spark, runner) -> dict:
+    rows = runner.report(spark).filter(F.col("column") == "u").collect()
+    return _dup_counts([r.asDict() for r in rows])
+
+
+def test_runner_exact_resume_refuses_retried_run_id(spark, tmp_path):
+    """A torn write under an explicit run_id (partials persisted, verdict
+    never written) retried under the SAME run_id would leave two trusted
+    copies of the partition's partials and corrupt every later charge: the
+    retry is refused, and a retry under a new run_id stays exact."""
+    from patito_spark.plans.checks import _Ctx, _compile_level
+    from patito_spark.plans.runner import _unique_partials
+
+    df = spark.createDataFrame([(0, 1), (1, 1)], "p int, u int")
+    ckpt = str(tmp_path / "retry")
+    runner = ValidationRunner(_U, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    ctx = _Ctx()
+    _compile_level(
+        ctx=ctx, errors=[], specs=_U.__column_specs__,
+        model_config=_U.model_config, df_columns=["p", "u"],
+        df_types={"p": T.IntegerType(), "u": T.IntegerType()},
+        columns=None, allow_missing_columns=False,
+        allow_superfluous_columns=False, path="", loc="", guard=None,
+    )
+    first = df.filter(F.col("p") == 0)
+    runner._persist_unique_partials(
+        _unique_partials(first, F.col("p").cast("string"), ctx.unique_targets),
+        "r1",
+    )
+    with pytest.raises(ValueError, match="run_id 'r1'"):
+        runner.run(first, run_id="r1")
+    assert _dup_counts(runner.run(first, run_id="r2").violations) == {}
+    # an explicit run_id whose partials all have verdicts may resume
+    assert _dup_counts(runner.run(df, run_id="r2").violations) == {"0": 1, "1": 1}
+    assert _persisted_dup_counts(spark, runner) == {"0": 1, "1": 1}
+
+
+def test_runner_exact_resume_group_duplicated_inside_finished(spark, tmp_path):
+    """A duplicate group already charged inside the finished partitions
+    gains a member on resume: the finished side's retroactive delta is 0
+    (its members were charged when it ran), the pending side is charged
+    its own member, and the cumulative table equals an uninterrupted run."""
+    rows = [(0, 5), (0, 5), (0, 7), (1, 7), (1, 8), (2, 5), (2, 7), (2, 9)]
+    df = spark.createDataFrame(rows, "p int, u int")
+    truth = _dup_counts(
+        ValidationRunner(
+            _U, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+        ).run(df).violations
+    )
+    assert truth == {"0": 3, "1": 1, "2": 2}
+
+    runner = ValidationRunner(
+        _U, "p", checkpoint_dir=str(tmp_path / "resume"), unique_resume="exact"
+    )
+    r1 = runner.run(df.filter(F.col("p") < 2))
+    assert _dup_counts(r1.violations) == {"0": 3, "1": 1}
+    r2 = runner.run(df)
+    # no retroactive rows: u=5 and u=7 were already duplicated
+    assert _dup_counts(r2.violations) == {"2": 2}
+    assert _persisted_dup_counts(spark, runner) == truth
+
+
+def test_runner_exact_resume_null_partition(spark, tmp_path):
+    """The NULL partition under exact resume: charged while pending, its
+    partials trusted once finished (null-safe trust key), and charged a
+    retroactive delta when a later partition joins its group."""
+    from typing import Optional
+
+    class M(pt.Model):
+        k: Optional[int]
+        u: int = pt.Field(unique=True)
+
+    run1 = [(0, 1), (1, 2)]
+    run2 = run1 + [(None, 1), (None, 3)]
+    run3 = run2 + [(2, 3)]
+    schema = "k int, u int"
+    truth = _dup_counts(
+        ValidationRunner(
+            M, "k", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+        ).run(spark.createDataFrame(run3, schema)).violations
+    )
+    assert truth == {"0": 1, None: 2, "2": 1}
+
+    runner = ValidationRunner(
+        M, "k", checkpoint_dir=str(tmp_path / "resume"), unique_resume="exact"
+    )
+    assert _dup_counts(runner.run(spark.createDataFrame(run1, schema)).violations) == {}
+    # the pending NULL partition is charged; finished partition 0 gets its delta
+    r2 = runner.run(spark.createDataFrame(run2, schema))
+    assert [v["partition"] for v in r2.verdicts] == [None]
+    assert _dup_counts(r2.violations) == {None: 1, "0": 1}
+    # the finished NULL partition's trusted partials draw its delta
+    r3 = runner.run(spark.createDataFrame(run3, schema))
+    assert r3.skipped_partitions == [None, "0", "1"]
+    assert _dup_counts(r3.violations) == {"2": 1, None: 1}
+    assert _persisted_dup_counts(spark, runner) == truth
+
+
+def test_runner_persist_roundtrips_null_partition_and_empty_lineage(spark, tmp_path):
+    """Checkpoint rows go to the JVM as Arrow tables: a None partition and
+    an empty input_files list survive, and the persisted schemas are the
+    checkpoint schemas."""
+    from patito_spark.plans.runner import VERDICT_SCHEMA, VIOLATION_SCHEMA
+
+    ckpt = str(tmp_path / "persist")
+    verdict = {
+        "partition": None,
+        "passed": False,
+        "n_rows": 3,
+        "n_violations": 2,
+        "run_id": "r",
+        "finished_at": 1.5,
+        "elapsed_sec": 0.25,
+        "input_files": [],
+    }
+    violation = {
+        "partition": None,
+        "column": "u",
+        "error_type": "value_error.rowvalue",
+        "message": "2 rows with duplicated values.",
+        "violation_count": 2,
+        "run_id": "r",
+    }
+    ValidationRunner(_U, "p", checkpoint_dir=ckpt)._persist(
+        spark, [verdict], [violation]
+    )
+    verdicts = spark.read.parquet(f"{ckpt}/verdicts")
+    violations = spark.read.parquet(f"{ckpt}/violations")
+    assert verdicts.schema == VERDICT_SCHEMA
+    assert violations.schema == VIOLATION_SCHEMA
+    assert [r.asDict() for r in verdicts.collect()] == [verdict]
+    assert [r.asDict() for r in violations.collect()] == [violation]
 
 
 # -- referential integrity -------------------------------------------------------
